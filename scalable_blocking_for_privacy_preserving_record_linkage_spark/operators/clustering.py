@@ -7,6 +7,8 @@ graph — each iteration is one shuffled self-join; components of a record
 linkage graph are tiny (bounded by duplicate multiplicity), so convergence
 is a handful of rounds. ``localCheckpoint`` truncates lineage each round so
 the plan does not grow (the standard Spark iterative-algorithm pattern).
+A graph that has not converged after ``max_iterations`` rounds raises
+instead of returning a split labelling.
 
 Node ids are namespaced ``"A:<id>"`` / ``"B:<id>"`` — the two parties are
 distinct id spaces (equal raw ids across parties is ground TRUTH, not
@@ -71,6 +73,7 @@ def _min_label_propagation(
     )
 
     prev_checked = labels
+    changed = None
     for it in range(1, max_iterations + 1):
         # candidate label for each node: min over (own label, neighbors' labels)
         neighbor_labels = (
@@ -93,8 +96,15 @@ def _min_label_propagation(
             )
             prev_checked = new_labels
             if changed == 0:
-                break
-    return labels
+                return labels
+    # labels travel one hop per round: a component whose diameter exceeds
+    # the round budget is still split, and returning it would silently
+    # report wrong clusters
+    raise RuntimeError(
+        f"connected components did not converge in {max_iterations} rounds "
+        f"({changed} labels still changing); the match graph has a path "
+        "longer than the round budget"
+    )
 
 
 def clusters_table(components: DataFrame) -> DataFrame:

@@ -5,12 +5,16 @@ Spark-first).
 Stage graph (shuffles annotated; compare the reference's six, SURVEY.md §3):
 
   records ──(normalize: narrow)──► classify_wide (pandas UDF, all 12
-          cells in one projection: narrow) ──► block_ids explode (narrow)
+          cells in one projection: narrow)  [M1: classified]
+          ──► block_ids explode (narrow)
           ──(window purge + ranks on blockID: SHUFFLE 1, shared exchange)
           ──(banded range-join: SHUFFLE 2)──► candidate pairs
-          ──(distinct: SHUFFLE 3)
+          ──(distinct: SHUFFLE 3)  [M2: candidates]
           ──(join blooms ×2: SHUFFLES 4,5)──► matches (codegen Dice filter)
+          [M3: matches]
           ──(iterative CC joins)──► clusters
+
+[Mk] marks a materialization point (below).
 
 The reference's 12-way classify-union + groupBy(recordID) regroup
 collapses into the stateless wide classify (no shuffle at all before
@@ -20,6 +24,22 @@ neighborhood loop becomes a codegen banded range-join — five shuffles on
 slimmer rows versus the reference's six on wider ones, with no Python in
 the per-pair path.
 
+Materialization points. Without them Spark re-derives every consumed
+frame from its lineage, and the classify pandas UDF sits under several
+consumers: ``purge_blocks`` reads the block elements twice (count side
+and element side) and the window self-joins them (looker × target), so
+a lazy ``classified`` ran the UDF stage four times inside the one
+candidates job. Whenever a run truncates lineage (metrics, clusters or
+``truncate_lineage`` requested, no ``checkpoint_dir``), three frames are
+local-checkpointed, each right after it is built:
+
+* M1 ``classified`` — the Arrow/Python boundary is crossed once per pass;
+* M2 ``candidates`` — consumed by the Dice join and by the metrics;
+* M3 ``matches`` — consumed by clustering (every CC round) and the metrics.
+
+With a ``checkpoint_dir`` every stage is written to Parquet and read
+back instead, which truncates lineage the same way.
+
 Every stage can checkpoint to Parquet (Iceberg in production) with a
 lineage manifest; a rerun with the same config resumes after the last
 completed stage (north-star resumability requirement).
@@ -27,8 +47,7 @@ completed stage (north-star resumability requirement).
 
 from __future__ import annotations
 
-import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -49,7 +68,6 @@ class PipelineResult:
     matches: DataFrame
     components: DataFrame | None
     metrics: LinkageMetrics | None
-    timings: dict = field(default_factory=dict)
 
 
 def run_pipeline(
@@ -65,13 +83,16 @@ def run_pipeline(
 ) -> PipelineResult:
     """records: (id, surname, name, city, party); reference_sets: (col1..colN)."""
     ph = cfg.params_hash()
-    timings: dict[str, float] = {}
 
-    def timed(name, fn):
-        t0 = time.time()
-        out = checkpoint_stage(fn, spark, checkpoint_dir, name, ph, resume)
-        timings[name] = time.time() - t0
-        return out
+    def stage(name, fn):
+        return checkpoint_stage(fn, spark, checkpoint_dir, name, ph, resume)
+
+    # without a durable checkpoint, truncate lineage locally at the
+    # materialization points (module docstring) whenever a frame has more
+    # than one downstream consumer
+    truncate = checkpoint_dir is None and (
+        with_clusters or with_metrics or truncate_lineage
+    )
 
     normalized = ensure_parallelism(extract.normalize_records(records, cfg)).cache()
 
@@ -93,27 +114,24 @@ def run_pipeline(
     # stateless wide classify: all 12 (attr, sample) cells in one projection
     # per record — no explode-then-regroup shuffle (the grid variant,
     # classify.classify, remains for incremental/inspection paths)
-    classified = timed(
+    classified = stage(
         "classified", lambda: classify.classify_wide(spark, normalized, samples, cfg)
     )
-    elements = timed(
+    if truncate:
+        classified = classified.localCheckpoint()
+    elements = stage(
         "block_elements",
         lambda: blocking.purge_blocks(
             blocking.block_ids_from_arrays(classified, cfg), cfg
         ),
     )
-    candidates = timed("candidates", lambda: window.candidate_pairs(elements, cfg))
+    candidates = stage("candidates", lambda: window.candidate_pairs(elements, cfg))
     # the reference caches matches before its double count (Simulator.java:50);
-    # without a durable checkpoint we truncate lineage locally so downstream
-    # consumers (Dice join, clustering, metrics) never re-run the classify/
-    # window DAG — matches MUST be built from the checkpointed candidates
-    truncate = checkpoint_dir is None and (
-        with_clusters or with_metrics or truncate_lineage
-    )
+    # matches MUST be built from the checkpointed candidates
     if truncate:
         candidates = candidates.localCheckpoint()
-    blooms = timed("blooms", lambda: matching.encode_blooms(normalized, cfg))
-    matches = timed(
+    blooms = stage("blooms", lambda: matching.encode_blooms(normalized, cfg))
+    matches = stage(
         "matches", lambda: matching.match_candidates(candidates, blooms, cfg)
     )
     if truncate:
@@ -121,13 +139,10 @@ def run_pipeline(
 
     components = None
     if with_clusters:
-        t0 = time.time()
         components = clustering.connected_components(matches)
-        timings["components"] = time.time() - t0
 
     metrics = None
     if with_metrics:
-        t0 = time.time()
         # expected matches = |ids on both sides| (ground truth: id equality,
         # Simulator.java:62; the reference derives it as DB_SIZE*COMMON_RECORDS
         # from its file construction, Conf.java:54-55)
@@ -135,7 +150,6 @@ def run_pipeline(
         b_ids = normalized.where("party = 'B'").select("id")
         expected = a_ids.intersect(b_ids).count()
         metrics = evaluate(matches, candidates, n_alice, n_bob, expected)
-        timings["metrics"] = time.time() - t0
 
     return PipelineResult(
         records=normalized,
@@ -146,7 +160,6 @@ def run_pipeline(
         matches=matches,
         components=components,
         metrics=metrics,
-        timings=timings,
     )
 
 

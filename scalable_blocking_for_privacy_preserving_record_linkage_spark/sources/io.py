@@ -36,8 +36,10 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
 
     Streaming frames pass through untouched (``df.rdd`` would raise on
     them, and micro-batch partitioning is the source's job). The partition
-    probe itself is driver-side plan construction only — no job runs — but
-    it is not free, so call this once per input scan, not per stage.
+    probe (``df.rdd.getNumPartitions()``) is NOT free: over a plain scan it
+    is driver-side plan construction, but over a lazy frame with a shuffle
+    (e.g. a ``groupBy``) it runs a Spark job to size the adaptive plan. Call
+    this once per input scan, never on a shuffled intermediate.
     """
     if df.isStreaming:
         return df

@@ -48,6 +48,15 @@ def test_golden_clusters(golden):
     assert all(m[:2] in ("A:", "B:") for m in first["members"])
 
 
+def test_classify_udf_is_not_rerun_downstream(golden):
+    """A lineage-truncating run materializes ``classified``, so neither it
+    nor the block elements built from it can re-enter the classify pandas
+    UDF (purge and window consume it several times per candidates job)."""
+    for df in (golden.classified, golden.elements):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ArrowEvalPython" not in plan
+
+
 def test_partition_invariance(spark):
     """Output must not depend on input partitioning (NOT true of the
     reference — its collect_list pairing is shuffle-dependent; our sort fix
